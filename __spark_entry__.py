@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship two-stage detect-then-extract pipeline
-(stage-1 pandas-UDF span proposal + stage-2 JVM decode + windowed
+(stage-1 pandas-UDF span proposal and decode + map-only per-row
 reassembly — see ``keras_ocr_spark/plans/pipeline.py``) over transcripts
 synthesized deterministically from the sf0.001 documents table.
 

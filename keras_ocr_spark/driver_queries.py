@@ -628,9 +628,9 @@ def q_decode_chain(spark, sf_dir):
 )
 def q_extract_documents(spark, sf_dir):
     """FLAGSHIP: the full two-stage detect-then-extract pipeline
-    (pandas-UDF stage 1 + JVM stage 2 + windowed reassembly,
-    pipeline.py:28-75 analog) over transcripts synthesized from the
-    documents table. The oracle knows the synthesized markup shape, so
+    (pandas-UDF stage 1 proposing and decoding spans + map-only per-row
+    reassembly, pipeline.py:28-75 analog) over transcripts synthesized
+    from the documents table. The oracle knows the synthesized markup shape, so
     the expected extraction is just the collapsed original text — an
     end-to-end golden at sf scale (test_pipeline.py:17-21 analog)."""
     docs = _t(spark, sf_dir, "documents")

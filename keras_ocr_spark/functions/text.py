@@ -1,4 +1,4 @@
-"""JVM-side text decode expressions — the stage-2 fast path.
+"""JVM-side text decode expression.
 
 Re-expresses ``keras_ocr_spark.core.decoder.decode_text`` as built-in
 Catalyst expressions (whole-stage-codegen'd, no Python worker):
@@ -46,12 +46,3 @@ def decode_expr(col: Column) -> Column:
     s = F.when(s.rlike("[\t\r\n]|  "), F.regexp_replace(s, WS_PATTERN, " ")).otherwise(s)
     return F.trim(s)
 
-
-def crop_expr(text: Column, start: Column, end: Column) -> Column:
-    """Span crop = substring (the 1-D ``warpBox``, ``tools.py:61-117``).
-
-    ``substring`` is 1-based; offsets are 0-based [start, end).
-    Fixtures stay in the BMP so UTF-16 units == code points and this
-    matches Python slicing exactly.
-    """
-    return F.substring(text, start + F.lit(1), end - start)

@@ -38,16 +38,12 @@ SPAN_TYPE = T.ArrayType(
         [
             T.StructField("start", T.IntegerType(), False),
             T.StructField("end", T.IntegerType(), False),
-            T.StructField("score", T.DoubleType(), False),
-            T.StructField("n_nodes", T.IntegerType(), False),
             # Decoded span text, produced by the SAME pure-Python
             # decoder the parity suite pins against the JVM expression
-            # chain (core/decoder.decode_text). Decoding here (r6)
-            # removes the per-span interpreted higher-order
-            # regexp/replace chain from the fused stage — the decode is
-            # one C-regex pass in the worker that already holds the
-            # string, instead of ~10 interpreted Catalyst expressions
-            # per span inside a transform() lambda.
+            # chain (core/decoder.decode_text). The worker already holds
+            # the string, so the decode is one C-regex pass here instead
+            # of ~10 interpreted Catalyst expressions per span inside a
+            # transform() lambda downstream.
             T.StructField("clean", T.StringType(), False),
         ]
     )
@@ -55,7 +51,7 @@ SPAN_TYPE = T.ArrayType(
 
 
 def propose_spans_udf(cfg: ExtractionConfig = DEFAULT_CONFIG):
-    """Vectorized pandas UDF: text -> array<struct<start,end,score,n_nodes>>.
+    """Vectorized pandas UDF: text -> array<struct<start,end,clean>>.
 
     Iterator form (``Iterator[pd.Series] -> Iterator[pd.Series]``): the
     per-task setup — closure constants, the kernel binding — happens once
@@ -64,12 +60,11 @@ def propose_spans_udf(cfg: ExtractionConfig = DEFAULT_CONFIG):
     ``detection.py:698-743``; also where a heavyweight model/tokenizer
     would be loaded once per executor).
 
-    Proposal + per-span decode (r6): the worker already holds the raw
-    string, so each span's clean text is one C-regex pass of the shared
-    pure decoder here; the blank-label drop (``recognition.py:483-488``)
-    stays JVM-side in the fused stage (the exploded/streaming variants
-    keep decoding JVM-side from the raw text — both paths are pinned
-    equal by the parity suite).
+    Proposal + per-span decode: the worker already holds the raw string,
+    so each span's clean text is one C-regex pass of the shared pure
+    decoder here; the blank-label drop (``recognition.py:483-488``) and
+    the ordered reassembly stay JVM-side in the fused stage
+    (``operators/fused.py``), for batch and streaming alike.
     """
     max_len = cfg.max_len
 
@@ -84,8 +79,6 @@ def propose_spans_udf(cfg: ExtractionConfig = DEFAULT_CONFIG):
                 {
                     "start": s.start,
                     "end": s.end,
-                    "score": s.score,
-                    "n_nodes": s.n_nodes,
                     "clean": _decode(capped[s.start : s.end]),
                 }
                 for s in _propose_spans(_tokenize(capped), len(capped), _cfg)
@@ -107,7 +100,6 @@ def detect(
     df: DataFrame,
     cfg: ExtractionConfig = DEFAULT_CONFIG,
     n_salt: int = 0,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Add a ``spans`` column to a transcript DataFrame.
 
@@ -115,6 +107,5 @@ def detect(
     skewed conversation's turns land in many partitions instead of one.
     """
     if n_salt > 0:
-        parts = [F.col("conv_id"), salt_expr(n_salt)]
-        df = df.repartition(num_partitions, *parts) if num_partitions else df.repartition(*parts)
+        df = df.repartition(F.col("conv_id"), salt_expr(n_salt))
     return df.withColumn("spans", propose_spans_udf(cfg)(F.col("text")))

@@ -8,13 +8,15 @@ continuously:
 
 - source: any streaming DataFrame with the transcript schema (file
   stream over the landing zone; Kafka in production — same plan);
-- stages 1+2 are IDENTICAL code to batch (detect -> decode): stateless
-  per-row transforms run unchanged under micro-batches;
-- per-turn reassembly is a stateful aggregation -> done per micro-batch
-  inside ``foreachBatch`` (a turn's spans arrive together in one file);
-  the sink is IDEMPOTENT: each micro-batch overwrites its own
-  ``epoch_id=N`` partition, so a replayed batch (failure between write
-  and offset commit) rewrites the same files instead of appending
+- the stream runs the batch plan itself (``plans.pipeline.extract``):
+  it is map-only — stage 1 proposes and decodes spans, the per-row
+  projection reassembles each turn — so it needs no state and no
+  per-batch regrouping, and stream output equals batch output row for
+  row;
+- the sink writes each micro-batch as it arrives inside
+  ``foreachBatch`` and is IDEMPOTENT: each micro-batch overwrites its
+  own ``epoch_id=N`` partition, so a replayed batch (failure between
+  write and offset commit) rewrites the same files instead of appending
   duplicates — end-to-end exactly-once at the file level;
 - a watermarked windowed count stream is exposed for monitoring
   (late-data handling: 10-minute watermark on ``ts``).
@@ -26,9 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, ExtractionConfig
-from ..operators.decode import decode
-from ..operators.detect import detect
-from ..operators.reassemble import reassemble
+from ..plans.pipeline import extract
 from ..sources.transcripts import TRANSCRIPT_SCHEMA
 
 
@@ -40,21 +40,10 @@ def read_transcript_stream(spark, path: str, max_files_per_trigger: int = 4) -> 
     )
 
 
-def extract_stream(stream_df: DataFrame, cfg: ExtractionConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Stateless stages over a streaming DataFrame (detect + decode).
-
-    Returns the per-span stream; reassembly happens in ``foreachBatch``
-    (see :func:`start_extraction`) because per-turn grouping is complete
-    within a micro-batch for file-based ingestion.
-    """
-    slim = stream_df.select("conv_id", "turn_idx", "text")
-    return decode(detect(slim, cfg=cfg))
-
-
 def epoch_sink(batch_df: DataFrame, epoch_id: int, out_dir: str) -> None:
     """Idempotent per-epoch sink: a replayed micro-batch overwrites its
     own epoch partition instead of appending a duplicate copy."""
-    reassemble(batch_df).write.mode("overwrite").parquet(f"{out_dir}/epoch_id={epoch_id}")
+    batch_df.write.mode("overwrite").parquet(f"{out_dir}/epoch_id={epoch_id}")
 
 
 def start_extraction(
@@ -69,13 +58,13 @@ def start_extraction(
     epoch writes to its own ``epoch_id=N`` partition with overwrite —
     replays rewrite the same path idempotently. Readers see ``epoch_id``
     as an extra partition column (drop or prune it)."""
-    spans = extract_stream(stream_df, cfg)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         epoch_sink(batch_df, epoch_id, out_dir)
 
     return (
-        spans.writeStream.foreachBatch(sink)
+        extract(stream_df, cfg)
+        .writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -134,6 +134,21 @@ class TestPrefixFilterJaccard:
         )
         assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
+    def test_threshold_on_exact_float_boundary(self, spark):
+        """0.55 * 100 == 55.00000000000001 in floating point: the size
+        and prefix bounds must still admit a pair at Jaccard exactly
+        0.55. Doc 1's 55 shingles all sit inside doc 2's 100."""
+        words = [f"w{i}" for i in range(102)]
+        df = spark.createDataFrame(
+            [(1, " ".join(words[:57])), (2, " ".join(words))], "doc_id int, text string"
+        )
+        naive = {(r.id_a, r.id_b): r.jaccard for r in D.ngram_jaccard_pairs(df, threshold=0.55).collect()}
+        pruned = {
+            (r.id_a, r.id_b): r.jaccard for r in D.prefix_filter_jaccard_pairs(df, threshold=0.55).collect()
+        }
+        assert naive == {(1, 2): 0.55}
+        assert pruned == naive
+
 
 class TestMinHashLSH:
     def test_signature_shape_and_determinism(self, docs):
@@ -502,6 +517,20 @@ class TestContainmentPairs:
         # trailing shingle survives per doc -> no pairs at all
         pruned = D.containment_pairs(df, threshold=0.8, max_shingle_df=5).collect()
         assert pruned == []
+
+    def test_threshold_on_exact_float_boundary(self, spark):
+        """0.55 * 100 == 55.00000000000001 in floating point: the prefix
+        and positional bounds must still admit a pair at containment
+        exactly 0.55. Doc 1 has 100 shingles; doc 2 shares its first 57
+        words (55 shingles) and adds 60 of its own (115 shingles)."""
+        a = [f"a{i}" for i in range(102)]
+        b = a[:57] + [f"b{i}" for i in range(60)]
+        df = spark.createDataFrame([(1, " ".join(a)), (2, " ".join(b))], "doc_id int, text string")
+        for threshold in (0.54, 0.55):
+            naive = sorted(tuple(r) for r in D.containment_pairs_naive(df, threshold=threshold).collect())
+            pruned = sorted(tuple(r) for r in D.containment_pairs(df, threshold=threshold).collect())
+            assert naive == [(1, 2, 100, 115, 0.55)]
+            assert pruned == naive
 
 
 class TestMultimodal:

@@ -1,9 +1,11 @@
-"""Streaming pipeline smoke: file-stream source -> stages 1+2 ->
-foreachBatch reassembly sink, driven synchronously with availableNow
-(the guide's local pattern). Output must equal the batch pipeline on the
-same input — streaming and batch share the same operator code."""
+"""Streaming pipeline smoke: file-stream source -> the map-only
+extraction plan -> idempotent foreachBatch sink, driven synchronously
+with availableNow (the guide's local pattern). Output must equal the
+batch pipeline on the same input — streaming and batch run the same
+plan."""
 
 import shutil
+import time
 from pathlib import Path
 
 import pandas as pd
@@ -12,6 +14,19 @@ import pytest
 from keras_ocr_spark.plans.pipeline import extract
 from keras_ocr_spark.sources.transcripts import generate_pandas
 from keras_ocr_spark.streaming import read_transcript_stream, start_extraction, turn_rate_monitor
+
+
+def await_drained(q, timeout_s: float = 180) -> None:
+    """Wait until the query has run a batch with no input rows, or until
+    ``timeout_s`` passes. A stateful query with processing-time timeouts
+    never terminates under ``availableNow``: once the data is consumed it
+    keeps running no-data batches for the timeouts, and
+    ``processAllAvailable()`` does not return either. Every input file is
+    in place before the query starts, so the first no-input batch means
+    all of them have been consumed and committed to the sink."""
+    deadline = time.monotonic() + timeout_s
+    while time.monotonic() < deadline and not any(p["numInputRows"] == 0 for p in q.recentProgress):
+        time.sleep(0.2)
 
 
 @pytest.fixture(scope="module")
@@ -33,12 +48,13 @@ def test_stream_equals_batch(spark, landing, tmp_path):
     q = start_extraction(read_transcript_stream(spark, src, max_files_per_trigger=1), out, ckpt)
     q.awaitTermination(120)
 
-    stream_rows = {
-        (r.conv_id, r.turn_idx): r.clean_text for r in spark.read.parquet(out).collect()
-    }
-    batch_rows = {
-        (r.conv_id, r.turn_idx): r.clean_text for r in extract(spark.read.parquet(src)).collect()
-    }
+    def frame(rows):
+        return {
+            (r.conv_id, r.turn_idx): (r.clean_text, [(s.start, s.end) for s in r.spans]) for r in rows
+        }
+
+    stream_rows = frame(spark.read.parquet(out).collect())
+    batch_rows = frame(extract(spark.read.parquet(src)).collect())
     assert stream_rows == batch_rows
 
 
@@ -48,16 +64,14 @@ def test_replayed_epoch_is_idempotent(spark, landing, tmp_path):
     must leave exactly one copy, not append a duplicate."""
     from pyspark.sql import functions as F
 
-    from keras_ocr_spark.operators.decode import decode
-    from keras_ocr_spark.operators.detect import detect
     from keras_ocr_spark.streaming.extract_stream import epoch_sink
 
     src = str(landing / "transcripts")
     out = str(tmp_path / "replay_out")
-    spans = decode(detect(spark.read.parquet(src).select("conv_id", "turn_idx", "text")))
-    epoch_sink(spans, 0, out)
+    batch = extract(spark.read.parquet(src))
+    epoch_sink(batch, 0, out)
     once = spark.read.parquet(out).count()
-    epoch_sink(spans, 0, out)  # replay of the same epoch
+    epoch_sink(batch, 0, out)  # replay of the same epoch
     again = spark.read.parquet(out)
     assert again.count() == once
     assert again.select("conv_id", "turn_idx").distinct().count() == once
@@ -114,7 +128,8 @@ def test_stateful_sessionize_stream_equals_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_drained(q)
+    q.stop()
 
     got = {
         (r.user_id, r.session_start_us, r.session_end_us, r.n_events, round(r.total_value, 2))
@@ -177,7 +192,8 @@ def test_sessionize_identical_user_ts_ties(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_drained(q, 120)
+    q.stop()
     got = {
         (r.user_id, r.session_start_us, r.session_end_us, r.n_events, r.total_value)
         for r in spark.sql("SELECT * FROM tie_sessions").collect()
