@@ -15,8 +15,6 @@ construction (same code, same arithmetic).
 
 from __future__ import annotations
 
-from typing import List, Sequence
-
 from .tokenizer import Node
 
 #: Density soft-knee: a node reaches score 0.5 (before penalties) at this
@@ -28,23 +26,10 @@ DENSITY_KNEE = 15
 LINK_PENALTY = 0.8
 
 
-def score_node(node: Node) -> float:
-    """Content score in [0, 1] for one node."""
-    if node.boiler:
-        return 0.0
-    density = node.tlen / (node.tlen + DENSITY_KNEE)
-    link_ratio = node.link_len / node.tlen if node.tlen else 0.0
-    return density * (1.0 - LINK_PENALTY * link_ratio)
-
-
-def link_ratio(node: Node) -> float:
-    return node.link_len / node.tlen if node.tlen else 0.0
-
-
 def score_and_ratio(node: Node) -> tuple:
     """(score, link_ratio) in one pass — the hot loop computes both per
     node; sharing the division keeps this the single source of the
-    scoring arithmetic (identical to score_node/link_ratio)."""
+    scoring arithmetic. Score is a content score in [0, 1]."""
     tlen = node.tlen
     ratio = node.link_len / tlen if tlen else 0.0
     if node.boiler:
@@ -52,5 +37,6 @@ def score_and_ratio(node: Node) -> tuple:
     return (tlen / (tlen + DENSITY_KNEE)) * (1.0 - LINK_PENALTY * ratio), ratio
 
 
-def score_nodes(nodes: Sequence[Node]) -> List[float]:
-    return [score_node(n) for n in nodes]
+def score_node(node: Node) -> float:
+    """Content score in [0, 1] for one node."""
+    return score_and_ratio(node)[0]

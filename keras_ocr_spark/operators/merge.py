@@ -4,9 +4,9 @@ A daily ingest doesn't append blindly: corrected turns / re-crawled
 docs must UPDATE their row, genuinely new keys INSERT. On Iceberg this
 is ``MERGE INTO target USING source ON key WHEN MATCHED THEN UPDATE
 WHEN NOT MATCHED THEN INSERT`` (copy-on-write / merge-on-read decided
-by the table); this sandbox has no Iceberg jars (see
-``sources/tableio.IcebergTableIO``), so the operator computes the
-exact post-MERGE table as a plan any backend can write back.
+by the table); this sandbox has no Iceberg jars, so the operator
+computes the exact post-MERGE table as a plan any backend can write
+back.
 
 Plan shape: ONE full-outer equi-join on the key (source wins where
 both exist) — a single hash shuffle of each side; at 100 TB with a

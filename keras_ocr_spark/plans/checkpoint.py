@@ -26,17 +26,18 @@ Graft analog of the reference's resume-from-checkpoint training loop
   resume, and stale ``bucket=K`` directories from an older layout are
   deleted up front (they are uncommitted under the current lineage).
 
-At 10^12-turn scale the real implementation is Iceberg snapshot IDs +
-partition-level commit metadata; the manifest JSON here mirrors exactly
-those fields behind a thin seam (``TableIO``), so the catalog swap is a
-config change, not a rewrite.
-
 Atomicity: manifests are written to a temp name then ``os.replace``d —
 a crashed writer never leaves a half-manifest that resume would trust.
 A crash during the Spark write itself leaves only uncommitted staging
-files (no manifest), so resume recomputes exactly the uncommitted
-buckets. ``max_buckets_per_run`` bounds the blast radius of a crash —
-each run commits at most that many buckets (still one scan per run).
+files (no manifest), so resume recomputes every pending bucket. Resume
+granularity is ONE BUCKET: manifests are published one at a time after
+the data write, so a crash part-way through that loop leaves some
+buckets attested and the next run redoes only the rest.
+
+Every reader goes through one manifest parser with one trust rule: an
+unparseable manifest is skipped (its bucket is redone), and a manifest
+attests a bucket only when it is complete and, for rows>0, the
+``bucket=K`` directory is still on disk.
 """
 
 from __future__ import annotations
@@ -47,7 +48,7 @@ import os
 import shutil
 from dataclasses import asdict
 from pathlib import Path
-from typing import Iterable, List, Optional
+from typing import Iterator, List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,64 +70,59 @@ def bucket_expr(n_buckets: int):
     return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
 
 
-def completed_buckets(out_dir: str, fingerprint: str, n_buckets: Optional[int] = None) -> List[int]:
-    """Buckets whose manifest exists and matches the current lineage."""
-    mdir = Path(out_dir) / MANIFEST_DIR
-    done = []
-    if not mdir.is_dir():
-        return done
-    for p in sorted(mdir.glob("bucket-*.json")):
+def _manifest_files(out_dir: str) -> Iterator[Tuple[Path, dict]]:
+    """(path, manifest) for every parseable ``bucket-K.json``, in file
+    order. A half-written or corrupt manifest is skipped: it attests
+    nothing, so its bucket is redone (and its file rewritten)."""
+    for p in sorted((Path(out_dir) / MANIFEST_DIR).glob("bucket-*.json")):
         try:
             m = json.loads(p.read_text())
-        except (json.JSONDecodeError, OSError):
-            continue  # half-written/corrupt manifest -> redo that bucket
-        if m.get("fingerprint") != fingerprint or m.get("status") != "complete":
+            m["bucket"] = int(m["bucket"])
+        except (OSError, ValueError, TypeError, KeyError):
             continue
-        if n_buckets is not None and m.get("n_buckets") != n_buckets:
-            continue  # belt-and-suspenders: fingerprint already covers it
-        # A manifest only attests data that is still on disk: an
-        # intermediate run under a DIFFERENT layout may have deleted this
-        # bucket's directory as stale while the manifest survived
-        # (observed when alternating n_buckets 6 -> 3 -> 6: resume
-        # trusted bucket-3..5.json whose dirs the 3-bucket run removed,
-        # silently dropping their rows).
-        if int(m.get("rows", 0)) > 0 and not (Path(out_dir) / f"bucket={int(m['bucket'])}").is_dir():
-            continue
-        done.append(int(m["bucket"]))
-    return done
+        yield p, m
 
 
-def _clean_stale_bucket_dirs(out_dir: str, done: set, n_buckets: int) -> List[int]:
+def _attests_data(out_dir: str, m: dict) -> bool:
+    """The one trust rule: a manifest attests its bucket only when it is
+    complete and, for rows>0, the bucket directory is still on disk. An
+    intermediate run under a DIFFERENT layout may have deleted the dir
+    as stale while the manifest survived (observed when alternating
+    n_buckets 6 -> 3 -> 6: trusting bucket-3..5.json whose dirs the
+    3-bucket run removed silently dropped their rows)."""
+    return m.get("status") == "complete" and (
+        not m.get("rows") or (Path(out_dir) / f"bucket={m['bucket']}").is_dir()
+    )
+
+
+def completed_buckets(out_dir: str, fingerprint: str) -> List[int]:
+    """Buckets whose manifest is trusted and matches the current lineage."""
+    return [
+        m["bucket"]
+        for m in read_manifests(out_dir)
+        if m.get("fingerprint") == fingerprint and _attests_data(out_dir, m)
+    ]
+
+
+def _clean_stale_bucket_dirs(out_dir: str, done: set, n_buckets: int) -> None:
     """Delete bucket=K dirs that are NOT committed under the current
     lineage: leftovers from a different n_buckets layout (K can exceed
     the current range) or from a crashed/partial run. Without this, a
     shrink of n_buckets would leave stale data that a directory-level
     read would silently include."""
-    removed = []
-    root = Path(out_dir)
-    if not root.is_dir():
-        return removed
-    for p in sorted(root.glob("bucket=*")):
+    for p in sorted(Path(out_dir).glob("bucket=*")):
         try:
             k = int(p.name.split("=", 1)[1])
         except ValueError:
             continue
         if k >= n_buckets or k not in done:
             shutil.rmtree(p)
-            removed.append(k)
     # Stale manifests too: a bucket-K.json from an older lineage is never
     # trusted for resume, but leaving it would make read_manifests()
     # double-count rows across layouts.
-    mdir = root / MANIFEST_DIR
-    if mdir.is_dir():
-        for p in sorted(mdir.glob("bucket-*.json")):
-            try:
-                k = int(json.loads(p.read_text()).get("bucket", -1))
-            except (json.JSONDecodeError, OSError, TypeError, ValueError):
-                continue  # corrupt manifests are redone (and rewritten) anyway
-            if k >= n_buckets or k not in done:
-                p.unlink()
-    return removed
+    for p, m in _manifest_files(out_dir):
+        if m["bucket"] >= n_buckets or m["bucket"] not in done:
+            p.unlink()
 
 
 def _write_manifest(out_dir: str, bucket: int, manifest: dict) -> None:
@@ -162,39 +158,32 @@ def run_with_checkpoints(
     n_buckets: int = 8,
     cfg: ExtractionConfig = DEFAULT_CONFIG,
     n_salt: int = 0,
-    max_buckets_per_run: Optional[int] = None,
-    fail_after_bucket: Optional[int] = None,
 ) -> dict:
-    """Checkpointed extraction: one single-scan job per run, per-bucket
-    manifests, resume skips committed buckets.
-
-    ``max_buckets_per_run`` caps how many pending buckets one run
-    commits (checkpoint interval — crash loses at most one run's work).
-    ``fail_after_bucket`` is the kill/resume test hook: commit that many
-    buckets, then crash.
+    """Checkpointed extraction: one single-scan job per run commits every
+    pending bucket, one manifest per bucket; resume skips committed
+    buckets.
 
     Returns a summary dict {buckets_run, buckets_skipped, rows}.
     """
     fingerprint = _config_fingerprint(cfg, input_path, n_buckets)
-    done = set(completed_buckets(out_dir, fingerprint, n_buckets))
+    done = set(completed_buckets(out_dir, fingerprint))
     _clean_stale_bucket_dirs(out_dir, done, n_buckets)
 
     pending = sorted(set(range(n_buckets)) - done)
-    limit = fail_after_bucket if fail_after_bucket is not None else max_buckets_per_run
-    this_run = pending[: limit] if limit is not None else pending
-    if not this_run:
+    if not pending:
         return {"buckets_run": [], "buckets_skipped": sorted(done), "rows": 0}
 
-    result = pending_plan(spark, input_path, this_run, n_buckets, cfg, n_salt)
+    result = pending_plan(spark, input_path, pending, n_buckets, cfg, n_salt)
 
-    # Dynamic partition overwrite: only the partitions present in this
-    # run's data are replaced; committed buckets stay untouched.
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        result.write.mode("overwrite").partitionBy("bucket").parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    # Dynamic partition overwrite, scoped to this writer: only the
+    # partitions present in this run's data are replaced; committed
+    # buckets stay untouched and the session conf is never changed.
+    (
+        result.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(out_dir)
+    )
 
     # Metrics + content hash from what was WRITTEN, ONE grouped pass
     # (read-back: the manifest attests the committed files, not the
@@ -207,7 +196,7 @@ def run_with_checkpoints(
     has_data = any(Path(out_dir).glob("bucket=*/*.parquet"))
     stats = {}
     if has_data:
-        written = spark.read.parquet(out_dir).filter(F.col("bucket").isin(this_run))
+        written = spark.read.parquet(out_dir).filter(F.col("bucket").isin(pending))
         row_sig = F.xxhash64(F.concat_ws("\x1e", "conv_id", "turn_idx", "clean_text"))
         stats = {
             int(r["bucket"]): r
@@ -221,7 +210,7 @@ def run_with_checkpoints(
         }
 
     total_rows = 0
-    for bucket in this_run:
+    for bucket in pending:
         r = stats.get(bucket)
         rows, spans, chash = (int(r["rows"]), int(r["spans"]), int(r["content_hash64"])) if r else (0, 0, 0)
         _write_manifest(
@@ -242,52 +231,32 @@ def run_with_checkpoints(
         )
         total_rows += rows
 
-    if fail_after_bucket is not None and len(pending) > len(this_run):
-        raise RuntimeError(f"injected failure after {len(this_run)} buckets")
-
-    return {"buckets_run": this_run, "buckets_skipped": sorted(done), "rows": total_rows}
+    return {"buckets_run": pending, "buckets_skipped": sorted(done), "rows": total_rows}
 
 
-def read_manifests(out_dir: str) -> Iterable[dict]:
-    mdir = Path(out_dir) / MANIFEST_DIR
-    for p in sorted(mdir.glob("bucket-*.json")):
-        yield json.loads(p.read_text())
+def read_manifests(out_dir: str) -> Iterator[dict]:
+    """Every parseable manifest; corrupt ones are skipped, not raised."""
+    for _, m in _manifest_files(out_dir):
+        yield m
 
 
-def read_committed(spark: SparkSession, out_dir: str, fingerprint: Optional[str] = None):
+def read_committed(spark: SparkSession, out_dir: str):
     """CONSISTENT READ of a checkpointed output: only buckets whose
-    manifests attest completion (optionally pinned to one lineage
-    ``fingerprint``) — a consumer mid-job never sees the staging files
-    of a bucket whose manifest hasn't committed, which is exactly the
-    snapshot-isolation read an Iceberg table gives for free and plain
-    parquet does not.
+    manifests attest completion — a consumer mid-job never sees the
+    staging files of a bucket whose manifest hasn't committed, which is
+    exactly the snapshot-isolation read an Iceberg table gives for free
+    and plain parquet does not.
 
     The bucket list becomes partition PRUNING on the scan (bucket is
     the physical partition key), so reading k of n committed buckets
     touches k directories. Returns None when nothing is committed yet
     OR when every committed bucket attests rows=0 (a rows=0 commit
     writes no parquet files, so there is no schema on disk to offer —
-    schema inference over zero files would raise). Mirrors
-    :func:`completed_buckets`' dir-existence rule: a rows>0 manifest
-    whose bucket directory a later re-layout deleted is NOT readable
-    and is excluded here too."""
-    committed = []
-    any_rows = False
-    for m in read_manifests(out_dir):
-        if m.get("status") != "complete":
-            continue
-        if fingerprint is not None and m.get("fingerprint") != fingerprint:
-            continue
-        bucket = int(m["bucket"])
-        rows = int(m.get("rows", 0))
-        # same guard as completed_buckets: the manifest only attests
-        # data still on disk (alternating n_buckets layouts can delete
-        # a bucket dir while its manifest survives).
-        if rows > 0 and not (Path(out_dir) / f"bucket={bucket}").is_dir():
-            continue
-        any_rows = any_rows or rows > 0
-        committed.append(bucket)
-    if not committed or not any_rows:
+    schema inference over zero files would raise). Uses the same trust
+    rule as :func:`completed_buckets`, so a corrupt manifest or a
+    rows>0 manifest whose bucket directory is gone is excluded."""
+    committed = [m for m in read_manifests(out_dir) if _attests_data(out_dir, m)]
+    if not any(m.get("rows") for m in committed):
         return None
     df = spark.read.option("basePath", out_dir).parquet(out_dir)
-    return df.filter(F.col("bucket").isin(committed))
+    return df.filter(F.col("bucket").isin([m["bucket"] for m in committed]))

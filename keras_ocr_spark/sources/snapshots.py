@@ -7,8 +7,7 @@ not: every write is a new immutable VERSION, readers pick a version
 point is a tiny metadata swap — never the data files themselves. This
 module provides that contract on the same parquet+manifest substrate
 as ``plans/checkpoint.py`` (see its atomicity notes), sized for the
-sandbox where the Iceberg jars are absent (``sources/tableio.py:48``
-holds the config-swap seam for when they exist).
+sandbox where the Iceberg jars are absent.
 
 Layout:
 
@@ -41,9 +40,10 @@ from pyspark.sql import DataFrame, SparkSession
 from ..plans.observe import write_with_audit
 
 
-def write_snapshot(df: DataFrame, table_dir: str) -> int:
+def write_snapshot(df: DataFrame, table_dir: str, batch_id: int | None = None) -> int:
     """Commit ``df`` as the next version of ``table_dir``; returns the
-    new version number. The manifest is the commit point."""
+    new version number. The manifest is the commit point; a streaming
+    sink passes its ``batch_id`` so the same atomic publish records it."""
     root = Path(table_dir)
     snaps = root / "_snapshots"
     snaps.mkdir(parents=True, exist_ok=True)
@@ -67,6 +67,8 @@ def write_snapshot(df: DataFrame, table_dir: str) -> int:
         "parent": versions[-1] if versions else None,
         "schema": df.schema.json(),
     }
+    if batch_id is not None:
+        manifest["batch_id"] = batch_id
     tmp = snaps / f".v{v}.json.tmp"
     tmp.write_text(json.dumps(manifest))
     os.replace(tmp, snaps / f"v{v}.json")

@@ -1,73 +1,13 @@
-"""TableIO seam: Iceberg-style table access behind a thin interface.
+"""Interchange-format table I/O: JSON-lines and ORC readers/writers.
 
-The north rule targets Iceberg transcript tables. This sandbox has no
-Iceberg runtime jars and no network, so the seam has two backends:
-
-- ``ParquetTableIO`` (active): plain parquet + the JSON manifests from
-  ``plans.checkpoint`` emulating snapshot/partition metadata;
-- ``IcebergTableIO`` (stub, import-gated): the production backend —
-  ``spark.read.table(...)`` / ``df.writeTo(tbl).append()`` with snapshot
-  pinning via ``VERSION AS OF``. Swapping backends is a config change;
-  no pipeline code references a concrete backend.
+Format dispatch lives at the edge (these helpers); everything after the
+read is one DataFrame representation. Parquet needs no helper — it is
+``spark.read.parquet`` / ``df.write.parquet`` directly.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
-
-
-@dataclass
-class ParquetTableIO:
-    """Parquet-backed tables (sandbox default)."""
-
-    spark: SparkSession
-
-    def read(self, path_or_name: str) -> DataFrame:
-        return self.spark.read.parquet(path_or_name)
-
-    def append(self, df: DataFrame, path_or_name: str) -> None:
-        df.write.mode("append").parquet(path_or_name)
-
-    def overwrite(self, df: DataFrame, path_or_name: str) -> None:
-        df.write.mode("overwrite").parquet(path_or_name)
-
-
-@dataclass
-class IcebergTableIO:
-    """Iceberg catalog tables (production; requires iceberg-spark-runtime
-    on the classpath and a configured catalog)."""
-
-    spark: SparkSession
-    snapshot_id: int | None = None
-
-    def __post_init__(self):
-        jars = self.spark.conf.get("spark.jars.packages", "")
-        if "iceberg" not in jars:
-            raise NotImplementedError(
-                "Iceberg runtime not on the classpath in this sandbox; "
-                "configure spark.jars.packages=org.apache.iceberg:iceberg-spark-runtime-... "
-                "and a catalog, then this backend is a drop-in"
-            )
-
-    def read(self, name: str) -> DataFrame:
-        reader = self.spark.read
-        if self.snapshot_id is not None:
-            reader = reader.option("snapshot-id", str(self.snapshot_id))
-        return reader.table(name)
-
-    def append(self, df: DataFrame, name: str) -> None:
-        df.writeTo(name).append()
-
-    def overwrite(self, df: DataFrame, name: str) -> None:
-        df.writeTo(name).overwritePartitions()
-
-
-def get_table_io(spark: SparkSession, backend: str = "parquet"):
-    if backend == "iceberg":
-        return IcebergTableIO(spark)
-    return ParquetTableIO(spark)
 
 
 def write_jsonl(df: DataFrame, path: str) -> None:

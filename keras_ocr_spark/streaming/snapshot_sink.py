@@ -10,7 +10,10 @@ standard idempotent-sink contract: the sink must be a no-op for a
 ``batch_id`` it has already committed.
 
 Implementation: every snapshot manifest written by this sink carries
-the ``batch_id`` it came from; on entry the sink scans the table
+the ``batch_id`` it came from, written by the same atomic manifest
+publish that commits the version (a separate stamp step after the
+commit would leave a crash window where a committed version has no
+``batch_id`` and the replay commits it twice); on entry the sink scans the table
 history (tiny — manifests only) and returns immediately when the
 batch_id is already present. The snapshot module's commit protocol
 (data first, atomic manifest last) then closes the remaining crash
@@ -56,19 +59,7 @@ def snapshot_batch_sink(batch_df: DataFrame, batch_id: int, table_dir: str) -> N
         # is invisible to every reader (manifests are the commit
         # point); clean it so the re-commit can land.
         shutil.rmtree(orphan)
-    v = write_snapshot(batch_df, table_dir)
-    # stamp the batch id into the manifest (read-modify-replace is safe:
-    # this sink is the only writer of this table, per foreachBatch's
-    # single-active-query contract)
-    import json
-    import os
-
-    mpath = root / "_snapshots" / f"v{v}.json"
-    manifest = json.loads(mpath.read_text())
-    manifest["batch_id"] = batch_id
-    tmp = root / "_snapshots" / f".v{v}.json.tmp"
-    tmp.write_text(json.dumps(manifest))
-    os.replace(tmp, mpath)
+    write_snapshot(batch_df, table_dir, batch_id=batch_id)
 
 
 def start_snapshot_ingest(stream_df: DataFrame, table_dir: str, checkpoint_dir: str):

@@ -71,3 +71,25 @@ class TestSnapshotIngest:
         assert [m["version"] for m in h] == [1, 2]
         assert h[1]["batch_id"] == 1
         assert read_snapshot(spark, table, 2).count() == 3  # replay's data, not the orphan's
+
+    def test_crash_after_version_commit_replay_is_noop(self, spark, landing, tmp_path, monkeypatch):
+        """A crash right after the version's manifest lands must not let
+        the replay commit the batch again: the manifest that commits the
+        version must already carry its batch_id."""
+        import os
+
+        table = str(tmp_path / "table")
+        df = spark.read.parquet(landing).limit(5)
+        real_replace = os.replace
+
+        def crash_after_v1(src, dst):
+            real_replace(src, dst)
+            if os.path.basename(dst) == "v1.json":
+                monkeypatch.setattr(os, "replace", real_replace)
+                raise OSError("injected crash after v1.json landed")
+
+        monkeypatch.setattr(os, "replace", crash_after_v1)
+        with pytest.raises(OSError, match="injected crash"):
+            snapshot_batch_sink(df, 0, table)
+        snapshot_batch_sink(df, 0, table)  # the replay of batch 0
+        assert [(m["version"], m.get("batch_id")) for m in history(table)] == [(1, 0)]
